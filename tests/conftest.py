@@ -19,6 +19,7 @@ def spark():
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
     s = get_spark("mrt-tests")
     yield s
+    s.stop()
 
 
 @pytest.fixture(scope="session")

@@ -11,7 +11,7 @@ import pandas as pd
 import pytest
 
 from mrt_data_integration_spark.estimators.local import (
-    _grouped_crossprod,
+    _sandwich_np,
     pwcls_np,
     wcls_np,
 )
@@ -54,14 +54,20 @@ def test_balanced_reshape_equals_explicit_key_on_user_major():
     rng = np.random.default_rng(5)
     n_users, t_max, d = 30, 20, 3
     scores = rng.standard_normal((n_users * t_max, d))
+
+    def meat(ids):
+        # identity hessian: the sandwich is the meat times n/(n-d), and
+        # every layout below has the same n_users
+        return _sandwich_np(scores, np.eye(d), ids, d)
+
     user_major_ids = np.repeat(np.arange(n_users), t_max)
-    meat_explicit = _grouped_crossprod(scores, user_major_ids)
+    meat_explicit = meat(user_major_ids)
     blocks = np.arange(n_users * t_max) // t_max  # balanced reshape
-    meat_blocks = _grouped_crossprod(scores, blocks)
+    meat_blocks = meat(blocks)
     np.testing.assert_allclose(meat_explicit, meat_blocks, atol=1e-10)
     # and on a time-major layout the two DIVERGE (the documented quirk)
     time_major_ids = np.tile(np.arange(n_users), t_max)
-    meat_tm = _grouped_crossprod(scores, time_major_ids)
+    meat_tm = meat(time_major_ids)
     assert not np.allclose(meat_tm, meat_blocks)
 
 
